@@ -1,11 +1,13 @@
-"""Arrow-batched numpy implementations of the dedup hash kernels.
+"""Arrow-batched numpy implementations of the dedup hash kernels — the
+one implementation of each family (trigram shingle sets, MinHash bands,
+SimHash, winnowing).
 
-The pure-expression forms in functions/text.py are correct but evaluate
-higher-order functions interpreted per array element (~100 ns/element);
-MinHash at k=128 over ~450 shingles/doc is ~60k element-evals per doc —
-the one place in the engine where the built-in-functions rule loses to an
-Arrow-batched numpy kernel by ~10×. These mapInPandas kernels are the
-sanctioned escape hatch (vectorized batch transfer, no per-row Python).
+As Column expressions these hashes evaluate higher-order functions
+interpreted per array element (~100 ns/element); MinHash at k=128 over
+~450 shingles/doc is ~60k element-evals per doc — the one place in the
+engine where the built-in-functions rule loses to an Arrow-batched numpy
+kernel. These mapInPandas kernels are the sanctioned escape hatch
+(vectorized batch transfer, no per-row Python).
 
 Determinism: zlib.crc32 / blake2b are stable across platforms and
 processes; affine permutation constants come from a fixed-seed PCG64.
@@ -16,8 +18,8 @@ verified against exact Jaccard before it leaves the operator.
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
-from hashlib import blake2b
+from collections.abc import Callable, Iterator
+from hashlib import blake2b, md5
 
 import numpy as np
 import pandas as pd
@@ -25,7 +27,7 @@ import pyspark.sql.types as T
 
 MINHASH_K = 128
 LSH_BANDS = 32
-LSH_ROWS = 4
+LSH_ROWS = 4  # 32 bands × 4 rows = 128 hashes; P(miss | j=0.8) ≈ 5e-8
 
 # fixed-seed affine permutation family over the 2^64 ring (a odd → bijective)
 _rng = np.random.Generator(np.random.PCG64(9172))
@@ -41,13 +43,25 @@ BAND_SCHEMA = T.StructType(
 )
 
 
-def _shingle_hashes(text: str, n: int = 3) -> np.ndarray:
+def _trigram_set(text: str) -> set[str]:
+    """Distinct word trigrams of the lower-cased whitespace tokens; empty
+    for docs with <3 tokens."""
     toks = text.lower().split()
-    if len(toks) < n:
-        return np.empty(0, dtype=np.uint64)
-    shingles = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+    return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+
+
+def _crc32_hashes(shingles: set[str]) -> np.ndarray:
+    """crc32 per shingle as a uint64 array — the MinHash input."""
     return np.fromiter(
         (zlib.crc32(s.encode()) for s in shingles), dtype=np.uint64, count=len(shingles)
+    )
+
+
+def _blake2b_sorted(shingles: set[str]) -> list[int]:
+    """Sorted signed blake2b-64 per shingle — the exact-verify set."""
+    return sorted(
+        int.from_bytes(blake2b(s.encode(), digest_size=8).digest(), "little") - 2**63
+        for s in shingles
     )
 
 
@@ -132,8 +146,11 @@ def minhash_bands(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     near-dup by trigram shingles).
     """
     for pdf in batches:
-        per_doc = [(int(d), _shingle_hashes(t)) for d, t in zip(pdf["doc_id"], pdf["text"])]
-        per_doc = [(d, h) for d, h in per_doc if h.size]
+        per_doc = [
+            (int(d), _crc32_hashes(sh))
+            for d, sh in zip(pdf["doc_id"], map(_trigram_set, pdf["text"]))
+            if sh
+        ]
         if not per_doc:
             yield pd.DataFrame(
                 {
@@ -176,16 +193,10 @@ def shingle_hash_sets(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
     an empty array.
     """
     for pdf in batches:
-        out = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            toks = text.lower().split()
-            shingles = {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
-            hs = sorted(
-                int.from_bytes(blake2b(s.encode(), digest_size=8).digest(), "little")
-                - 2**63
-                for s in shingles
-            )
-            out.append({"doc_id": doc_id, "sh": hs})
+        out = [
+            {"doc_id": doc_id, "sh": _blake2b_sorted(_trigram_set(text))}
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"])
+        ]
         yield pd.DataFrame(out, columns=["doc_id", "sh"])
 
 
@@ -213,23 +224,11 @@ def minhash_band_sets(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
         per_doc: list[tuple[int, np.ndarray]] = []
         blakes: list[list[int]] = []
         for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            toks = text.lower().split()
-            if len(toks) < 3:
+            shingles = _trigram_set(text)
+            if not shingles:
                 continue
-            shingles = {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
-            crc = np.fromiter(
-                (zlib.crc32(s.encode()) for s in shingles),
-                dtype=np.uint64,
-                count=len(shingles),
-            )
-            per_doc.append((int(doc_id), crc))
-            blakes.append(
-                sorted(
-                    int.from_bytes(blake2b(s.encode(), digest_size=8).digest(), "little")
-                    - 2**63
-                    for s in shingles
-                )
-            )
+            per_doc.append((int(doc_id), _crc32_hashes(shingles)))
+            blakes.append(_blake2b_sorted(shingles))
         if not per_doc:
             yield pd.DataFrame(
                 {
@@ -251,46 +250,7 @@ def minhash_band_sets(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
             )
 
 
-SIMHASH_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("simhash", T.LongType()),
-    ]
-)
-
 _BIT_POS = np.arange(64, dtype=np.uint64)
-
-
-def simhash_fingerprints(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(doc_id, text) batches → (doc_id, simhash) 64-bit fingerprints.
-
-    blake2b(digest 8B) per token, vectorized ±1 bit-count over a
-    (n_tokens, 64) matrix, sign → bits → one int64.
-    """
-    for pdf in batches:
-        out_doc, out_sim = [], []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            toks = text.lower().split()
-            if not toks:
-                out_doc.append(doc_id)
-                out_sim.append(0)
-                continue
-            h = np.fromiter(
-                (
-                    int.from_bytes(blake2b(t.encode(), digest_size=8).digest(), "little")
-                    for t in toks
-                ),
-                dtype=np.uint64,
-                count=len(toks),
-            )
-            bits = ((h[:, None] >> _BIT_POS[None, :]) & np.uint64(1)).astype(np.int64)
-            counts = (2 * bits - 1).sum(axis=0)
-            sig = np.bitwise_or.reduce((counts > 0).astype(np.uint64) << _BIT_POS)
-            out_doc.append(doc_id)
-            out_sim.append(int(sig.astype(np.int64)))
-        yield pd.DataFrame(
-            {"doc_id": pd.Series(out_doc, dtype="int64"), "simhash": pd.Series(out_sim, dtype="int64")}
-        )
 
 
 # Shared bound for the per-task token→digest memos below (ADVICE r11):
@@ -299,6 +259,30 @@ def simhash_fingerprints(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
 # per-level vocabulary growth, while virtually never evicting at bench
 # scale (sf0.1 vocabulary ≈ 60k distinct tokens).
 _MEMO_CAP = 1 << 20
+
+
+def _capped_memo(fn: Callable[[str], object]) -> Callable[[str], object]:
+    """Partition-lifetime memo of a pure token → digest function: the
+    digest runs once per DISTINCT token instead of per occurrence, and
+    results are bit-identical regardless of cache state. CAPPED, not
+    unbounded (ADVICE r11): the chained mutated decade slices salt ~every
+    4th token per level, multiplying distinct-token count ~10× per
+    decade, so an unbounded memo could grow to tens of millions of string
+    keys per Python worker. Clearing on overflow is correctness-free
+    (pure function) and cheap: token frequencies are zipfian, so the hot
+    head repopulates within a batch."""
+    cache: dict[str, object] = {}
+
+    def get(t: str) -> object:
+        v = cache.get(t)
+        if v is None:
+            if len(cache) >= _MEMO_CAP:
+                cache.clear()
+            v = cache[t] = fn(t)
+        return v
+
+    return get
+
 
 SIMHASH128_SCHEMA = T.StructType(
     [
@@ -314,12 +298,13 @@ def simhash_fingerprints128(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Data
     as two int64 halves.
 
     md5 (16 B — exactly the signature width) per token split into two
-    little-endian uint64 words, the same vectorized ±1 bit-count as the
-    64-bit kernel run once per half. md5 rather than blake2b is what
-    upgrades dedup_simhash from rows-only to DuckDB-oracled: the oracle
-    rebuilds the identical per-token bytes with its own md5() and replays
-    the signed bit sums byte-level (equally uniform bits; the projection
-    family changes but the SimHash guarantees don't). 128 bits exist for
+    little-endian uint64 words, a vectorized ±1 bit-count over each
+    (n_tokens, 64) half, sign → bits → one int64 per half. md5 rather
+    than blake2b is what upgrades dedup_simhash from rows-only to
+    DuckDB-oracled: the oracle rebuilds the identical per-token bytes
+    with its own md5() and replays the signed bit sums byte-level
+    (equally uniform bits; the projection family changes but the SimHash
+    guarantees don't). 128 bits exist for
     the BAND INDEX, not for precision: 64-bit SimHash at
     hamming ≤3 forces 4×16-bit bands (pigeonhole), whose 2^16 key space
     saturates near ~10M docs (candidates grow Σ s² with bucket occupancy
@@ -327,28 +312,7 @@ def simhash_fingerprints128(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Data
     bits (pairs of 16-bit blocks), pushing saturation out by 2^16×.
     Empty docs emit (0, 0).
     """
-    from hashlib import md5
-
-    # Partition-lifetime digest memo (same pattern as winnow's tok_hash):
-    # md5 runs once per DISTINCT token instead of per occurrence — the
-    # digest is a pure function of the token, so signatures are
-    # bit-identical regardless of cache state. CAPPED, not unbounded
-    # (ADVICE r11): the chained mutated decade slices salt ~every 4th
-    # token per level, multiplying distinct-token count ~10× per decade,
-    # so at the fourth decade an unbounded memo could grow to tens of
-    # millions of string keys per Python worker. Clearing on overflow is
-    # correctness-free (pure function) and cheap: token frequencies are
-    # zipfian, so the hot head repopulates within a batch.
-    dcache: dict[str, bytes] = {}
-
-    def tok_digest(t: str) -> bytes:
-        v = dcache.get(t)
-        if v is None:
-            if len(dcache) >= _MEMO_CAP:
-                dcache.clear()
-            v = md5(t.encode()).digest()
-            dcache[t] = v
-        return v
+    tok_digest = _capped_memo(lambda t: md5(t.encode()).digest())
 
     for pdf in batches:
         out_doc, out_hi, out_lo = [], [], []
@@ -409,26 +373,13 @@ def winnow_fingerprints(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     WINNOW_P/WINNOW_B), sliding-window minima via a strided view,
     distinct minima per doc.
 
-    Replaces the pure-expression form for the hot path: nested
-    transform-over-slice HOFs re-evaluate the whole k-gram array per
-    window position (CollapseProject), turning an O(n·w) algorithm into
-    O(n²) interpreted evals — measured 55 s for 500 docs at sf0.01 vs
-    ~1 s here. The hash family is engine-portable, so the pair output
-    is DuckDB-oracled end-to-end; guarantees are unchanged: any shared
-    token run of ≥ w+k-1 yields a shared fingerprint."""
-    from hashlib import md5
-
-    # Capped like simhash's dcache (ADVICE r11) — see _MEMO_CAP.
-    cache: dict[str, int] = {}
-
-    def tok_hash(t: str) -> int:
-        v = cache.get(t)
-        if v is None:
-            if len(cache) >= _MEMO_CAP:
-                cache.clear()
-            v = int(md5(t.encode()).hexdigest()[:8], 16) % WINNOW_P
-            cache[t] = v
-        return v
+    As a Column expression, nested transform-over-slice HOFs re-evaluate
+    the whole k-gram array per window position (CollapseProject), turning
+    an O(n·w) algorithm into O(n²) interpreted evals — measured 55 s for
+    500 docs at sf0.01 vs ~1 s here. The hash family is engine-portable,
+    so the pair output is DuckDB-oracled end-to-end; any shared token run
+    of ≥ w+k-1 yields a shared fingerprint."""
+    tok_hash = _capped_memo(lambda t: int(md5(t.encode()).hexdigest()[:8], 16) % WINNOW_P)
 
     for pdf in batches:
         out_doc: list[int] = []

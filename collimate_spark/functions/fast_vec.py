@@ -31,14 +31,11 @@ def _normalize(mat: np.ndarray) -> np.ndarray:
     return mat / norms
 
 
-def train_spherical_kmeans(
-    vectors: np.ndarray, k: int, seed: int = KMEANS_SEED, iters: int = KMEANS_ITERS
-) -> np.ndarray:
-    """k-means++ init + Lloyd iterations with cosine assignment on
-    L2-normalized vectors (spherical k-means: euclidean on the unit sphere
-    is monotone in cosine). Single-threaded numpy → deterministic for a
-    fixed input order and seed. Returns (k, dim) normalized centroids."""
-    X = _normalize(vectors.astype(np.float64, copy=False))
+def _kmeanspp_init(X: np.ndarray, k: int, seed: int) -> np.ndarray:
+    """k-means++ seeding: (k, dim) rows of ``X``, each later pick drawn with
+    probability ∝ squared distance to the nearest earlier pick (uniform
+    when every point coincides with a pick). Fixed-seed PCG64 →
+    deterministic for a fixed input order."""
     n = len(X)
     rng = np.random.Generator(np.random.PCG64(seed))
     chosen = [int(rng.integers(n))]
@@ -50,7 +47,18 @@ def train_spherical_kmeans(
             chosen.append(int(rng.integers(n)))
         else:
             chosen.append(int(rng.choice(n, p=d2 / total)))
-    C = X[chosen].copy()
+    return X[chosen].copy()
+
+
+def train_spherical_kmeans(
+    vectors: np.ndarray, k: int, seed: int = KMEANS_SEED, iters: int = KMEANS_ITERS
+) -> np.ndarray:
+    """k-means++ init + Lloyd iterations with cosine assignment on
+    L2-normalized vectors (spherical k-means: euclidean on the unit sphere
+    is monotone in cosine). Single-threaded numpy → deterministic for a
+    fixed input order and seed. Returns (k, dim) normalized centroids."""
+    X = _normalize(vectors.astype(np.float64, copy=False))
+    C = _kmeanspp_init(X, k, seed)
     for _ in range(iters):
         assign = np.argmax(X @ C.T, axis=1)
         newC = np.vstack(
@@ -63,26 +71,42 @@ def train_spherical_kmeans(
     return C
 
 
-def trained_quantizer(spark, df, k: int, cache_key: str) -> np.ndarray:
-    """Train (or fetch memoized) centroids for a DataFrame with
-    (vec_id, embedding) columns. Sampling is deterministic — a pmod filter
+def _training_sample(df, cache_key: str) -> np.ndarray:
+    """The bounded training sample of a (vec_id, embedding) DataFrame as
+    an (n, dim) float64 matrix. Sampling is deterministic — a pmod filter
     on xxhash64(vec_id) picked so ≈SAMPLE_CAP rows survive — and the
-    collected sample is sorted by vec_id before training, so the result
-    does not depend on partition arrival order."""
+    collected sample is sorted by vec_id, so training does not depend on
+    partition arrival order.
+
+    Raises ValueError naming ``cache_key`` (the embeddings table's
+    location) when there is nothing to train on: k-means needs at least
+    one vector, and an empty collect would otherwise surface as a numpy
+    AxisError deep inside normalization."""
     import pyspark.sql.functions as F
 
-    key = (cache_key, k)
-    hit = _QUANTIZER_CACHE.get(key)
-    if hit is not None:
-        return hit
     n = df.count()
     modulus = max(1, n // SAMPLE_CAP)
     sample = df.select("vec_id", "embedding")
     if modulus > 1:
         sample = sample.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(modulus)) == 0)
     rows = sorted(sample.collect(), key=lambda r: r[0])
-    X = np.array([r[1] for r in rows], dtype=np.float64)
-    C = train_spherical_kmeans(X, k)
+    if not rows:
+        raise ValueError(
+            f"embeddings table {cache_key!r} has no (vec_id, embedding) rows "
+            "to train a quantizer on"
+        )
+    return np.array([r[1] for r in rows], dtype=np.float64)
+
+
+def trained_quantizer(spark, df, k: int, cache_key: str) -> np.ndarray:
+    """Train (or fetch memoized) centroids for a DataFrame with
+    (vec_id, embedding) columns, on the deterministic bounded sample of
+    ``_training_sample`` (which raises ValueError on an empty frame)."""
+    key = (cache_key, k)
+    hit = _QUANTIZER_CACHE.get(key)
+    if hit is not None:
+        return hit
+    C = train_spherical_kmeans(_training_sample(df, cache_key), k)
     _QUANTIZER_CACHE[key] = C
     return C
 
@@ -161,18 +185,7 @@ def _train_kmeans_l2(
     subspace coordinates, NOT on the unit sphere — spherical assignment
     would be wrong here). Deterministic for fixed input order and seed."""
     X = X.astype(np.float64, copy=False)
-    n = len(X)
-    rng = np.random.Generator(np.random.PCG64(seed))
-    chosen = [int(rng.integers(n))]
-    d2 = np.full(n, np.inf)
-    for _ in range(k - 1):
-        d2 = np.minimum(d2, ((X - X[chosen[-1]]) ** 2).sum(axis=1))
-        total = d2.sum()
-        if total <= 0:
-            chosen.append(int(rng.integers(n)))
-        else:
-            chosen.append(int(rng.choice(n, p=d2 / total)))
-    C = X[chosen].copy()
+    C = _kmeanspp_init(X, k, seed)
     for _ in range(iters):
         d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
         assign = np.argmin(d, axis=1)
@@ -189,22 +202,15 @@ def trained_pq_codebooks(
     spark, df, m: int = PQ_M, ks: int = PQ_KS, cache_key: str = ""
 ) -> np.ndarray:
     """Train (or fetch memoized) PQ codebooks, shape (m, ks, dim/m), on the
-    same deterministic bounded sample as ``trained_quantizer``. Vectors
-    are L2-normalized BEFORE splitting, so squared ADC distance is
-    monotone in cosine (on the unit sphere L2² = 2 − 2·cos)."""
-    import pyspark.sql.functions as F
-
+    same deterministic bounded sample as ``trained_quantizer`` (ValueError
+    on an empty frame). Vectors are L2-normalized BEFORE splitting, so
+    squared ADC distance is monotone in cosine (on the unit sphere
+    L2² = 2 − 2·cos)."""
     key = (cache_key, m, ks)
     hit = _PQ_CACHE.get(key)
     if hit is not None:
         return hit
-    n = df.count()
-    modulus = max(1, n // SAMPLE_CAP)
-    sample = df.select("vec_id", "embedding")
-    if modulus > 1:
-        sample = sample.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(modulus)) == 0)
-    rows = sorted(sample.collect(), key=lambda r: r[0])
-    X = _normalize(np.array([r[1] for r in rows], dtype=np.float64))
+    X = _normalize(_training_sample(df, cache_key))
     sub = X.shape[1] // m
     books = np.stack(
         [

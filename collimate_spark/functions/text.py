@@ -1,9 +1,9 @@
-"""Text expression builders: tokenization, shingling, MinHash, SimHash,
-fingerprints. Everything is a Column expression over built-in functions
-(``split``/``transform``/``aggregate``/``xxhash64``) — whole-stage-codegen
-eligible, no Python in the executor hot path. That is the 100 TB design:
-a MinHash signature is "just columns", so dedup runs as scans + one
-shuffle, never a Python loop.
+"""Text expression builders: normalization, tokens, Hamming distance and
+the bag-of-words fingerprint. Everything is a Column expression over
+built-in functions — whole-stage-codegen eligible, no Python in the
+executor hot path. The hash kernels (MinHash bands, SimHash, shingle
+sets, winnowing) live once, as Arrow-batched numpy, in
+functions/fast_text.py.
 """
 
 from __future__ import annotations
@@ -23,130 +23,10 @@ def tokens(col: Column) -> Column:
     return F.split(normalize_text(col), " ")
 
 
-def word_shingles(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-grams as array<string>. Empty array when the doc has
-    fewer than n tokens (guards sequence() against negative ranges)."""
-    joined = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
-    return F.array_distinct(
-        F.when(F.size(toks) >= n, joined).otherwise(F.array().cast("array<string>"))
-    )
-
-
-def minhash_signature(shingles: Column, k: int = 128) -> Column:
-    """k-permutation MinHash signature as array<bigint>.
-
-    Permutation family: xxhash64(shingle, seed) for seed=1..k — standard
-    seeded-hash MinHash. array_min over the hashed shingle array per seed;
-    all codegen'd, O(k·|shingles|) per row, embarrassingly parallel.
-    Empty shingle set → signature of NULLs (never joins).
-    """
-    return F.transform(
-        F.sequence(F.lit(1), F.lit(k)),
-        lambda s: F.array_min(F.transform(shingles, lambda sh: F.xxhash64(sh, s))),
-    )
-
-
-def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """LSH banding over a *materialized* signature column: hash each
-    contiguous rows_per_band slice → array of (band_index, band_hash)
-    structs. Docs sharing any band key are candidate pairs; join on the
-    key — never O(n²).
-
-    CAUTION: if ``signature`` is an unmaterialized expression,
-    CollapseProject will substitute it into every band slice and recompute
-    the full MinHash per band (bands× blowup). Prefer
-    ``minhash_band_hash`` with an exploded band-index column, which
-    computes exactly one band's seeds per row.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.alias("band"),
-            F.xxhash64(
-                F.concat_ws(",", F.transform(F.slice(signature, b * rows_per_band + 1, rows_per_band), lambda v: v.cast("string")))
-            ).alias("band_hash"),
-        ),
-    )
-
-
-def minhash_band_hash(shingles: Column, band: Column, rows_per_band: int) -> Column:
-    """Fused MinHash+banding for explode-first LSH: given a band index
-    column, compute that band's rows_per_band seed-minima directly from the
-    shingle set and hash them. Seeds band·r+1 … band·r+r partition the same
-    1..k family ``minhash_signature`` uses, so (explode bands →
-    minhash_band_hash) ≡ (minhash_signature → slice per band) at exactly
-    1× the signature cost — no expression duplication for Catalyst to
-    inline."""
-    minima = F.array(
-        *[
-            F.array_min(F.transform(shingles, lambda sh: F.xxhash64(sh, band * rows_per_band + j + 1)))
-            for j in range(rows_per_band)
-        ]
-    )
-    return F.xxhash64(F.concat_ws(",", F.transform(minima, lambda v: v.cast("string"))))
-
-
-def simhash64(toks: Column) -> Column:
-    """64-bit SimHash over the token multiset (Charikar '02).
-
-    For each bit position b: sum over tokens of (+1 if bit b of
-    xxhash64(token) set else -1); result bit b = 1 iff sum > 0. One
-    F.aggregate fold over a 64-long-array accumulator, assembled to a
-    single signed long in the finish lambda (bit positions are Python ints
-    because shiftright/shiftleft require literal shift amounts).
-    """
-    zero = F.array_repeat(F.lit(0).cast("long"), 64)
-
-    def merge(acc: Column, t: Column) -> Column:
-        h = F.xxhash64(t)
-        bits = F.array(*[F.shiftright(h, b).bitwiseAND(F.lit(1)) for b in range(64)])
-        return F.zip_with(
-            acc, bits, lambda a, bit: a + F.when(bit == 1, F.lit(1)).otherwise(F.lit(-1))
-        )
-
-    def finish(acc: Column) -> Column:
-        out = F.lit(0).cast("long")
-        for b in range(64):
-            weight = F.lit(1 << b if b < 63 else -(1 << 63)).cast("long")
-            out = out.bitwiseOR(F.when(acc.getItem(b) > 0, weight).otherwise(F.lit(0).cast("long")))
-        return out
-
-    return F.aggregate(toks, zero, merge, finish)
-
-
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two 64-bit fingerprints: popcount(a XOR b)
     via bit_count (built-in)."""
     return F.bit_count(a.bitwiseXOR(b))
-
-
-def winnow_fingerprints(toks: Column, k: int = 4, w: int = 5) -> Column:
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken '03):
-    rolling hash over token k-grams, then the minimum hash of each sliding
-    window of w consecutive k-gram hashes; the distinct window-minima set
-    is the fingerprint. Guarantees any shared run of ≥ w+k-1 tokens yields
-    a shared fingerprint — the basis of plagiarism/near-dup detection with
-    positional locality (unlike MinHash, which is order-blind).
-
-    Pure JVM expressions: k-gram hash = xxhash64 of the joined slice;
-    window minima via transform over start offsets. Empty → empty array.
-    """
-    kgrams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - k),
-        lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i + 1, k))),
-    )
-    kgrams = F.when(F.size(toks) >= k, kgrams).otherwise(
-        F.array().cast("array<bigint>")
-    )
-    minima = F.transform(
-        F.sequence(F.lit(0), F.size(kgrams) - w),
-        lambda i: F.array_min(F.slice(kgrams, i + 1, w)),
-    )
-    minima = F.when(F.size(kgrams) >= w, minima).otherwise(kgrams)
-    return F.array_distinct(minima)
 
 
 def bow_fingerprint(col: Column) -> Column:

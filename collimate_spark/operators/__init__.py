@@ -165,7 +165,6 @@ ROTATION_CANDIDATES: tuple[str, ...] = (
     "dedup_embedding_cosine",
     "dedup_exact",
     "dedup_minhash_lsh",
-    "dedup_minhash_lsh_expr",
     "dedup_ngram_jaccard",
     "dedup_simhash",
     "dedup_survivor_best_quality",

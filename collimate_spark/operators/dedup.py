@@ -28,12 +28,9 @@ from collimate_spark.scratch import scache
 from collimate_spark.functions import fast_text
 from collimate_spark.functions import text as X
 from collimate_spark.functions import vectors as V
-from collimate_spark.functions.pairs import blocked_pair_cosines, bounded_self_pairs
+from collimate_spark.functions.pairs import blocked_pair_cosines
 
 JACCARD_THRESHOLD = 0.8
-MINHASH_K = 128
-LSH_BANDS = 32
-LSH_ROWS = 4  # 32 bands × 4 rows = 128 hashes; P(miss | j=0.8) ≈ 5e-8
 BUCKET_CAP = 1024  # max members whose pairs one task may generate
 
 
@@ -99,22 +96,6 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     if len(df.inputFiles()) < spark.sparkContext.defaultParallelism:
         return df.repartition(spark.sparkContext.defaultParallelism)
     return df
-
-
-def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String trigram-shingle sets via pure JVM expressions (used by the
-    zero-Python expr variant)."""
-    docs = _spread(spark, load_table(spark, "documents", sf_dir))
-    # token array projected ONCE behind an alias (r13): inline, the
-    # shingle lambda's slice(toks, …) re-runs the whole tokenizer per
-    # position (HOF lambda bodies evaluate interpreted per element —
-    # the winnow kernel's documented pathology). The alias is referenced
-    # >1 time inside word_shingles and is not cheap, so CollapseProject
-    # keeps the boundary.
-    base = docs.select("doc_id", X.tokens(F.col("text")).alias("toks"))
-    return base.select(
-        "doc_id", X.word_shingles(F.col("toks"), 3).alias("shingles")
-    ).filter(F.size("shingles") > 0)
 
 
 def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -237,8 +218,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle (exact pairs) matches as long as banding recall ≈ 1
     (P(miss|j≥0.8) ≈ 5e-8 at 32×4; the band-hash family is free to change
     because equal bands always collide and spurious collisions die in the
-    verify). The pure-expression form stays available as
-    ``minhash_band_hash`` + ``dedup_minhash_lsh_expr``.
+    verify).
     """
     docs = _spread(spark, load_table(spark, "documents", sf_dir))
     merged = (
@@ -390,37 +370,6 @@ def _bucket_pairs(
     if payload:
         out = out.withColumnsRenamed({"__pa": f"{payload}_a", "__pb": f"{payload}_b"})
     return out
-
-
-def dedup_minhash_lsh_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pure-expression (zero-Python) MinHash-LSH: explode band indices
-    FIRST, then compute only that band's seed minima per row
-    (minhash_band_hash) — total hash work = one full signature per doc.
-    Slicing an inline signature expression instead would let
-    CollapseProject recompute the whole signature per band (32×).
-    Same verified output as dedup_minhash_lsh; ~10× slower kernel, kept as
-    the no-Python fallback and for parity testing."""
-    shingled = _shingled(spark, sf_dir)
-    banded = (
-        shingled.select(
-            "doc_id",
-            "shingles",
-            F.explode(F.sequence(F.lit(0), F.lit(LSH_BANDS - 1))).alias("band"),
-        )
-        .select(
-            "doc_id",
-            "band",
-            X.minhash_band_hash(F.col("shingles"), F.col("band"), LSH_ROWS).alias("band_hash"),
-        )
-    )
-    candidates = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "band_hash"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    return _verified_jaccard_pairs(candidates, shingled)
 
 
 SIMHASH_BLOCKS = 8       # 16-bit blocks of the 128-bit fingerprint
@@ -1550,7 +1499,6 @@ QUERIES = {
     "set_overlap_join_prefix": set_overlap_join_prefix,
     "dedup_ngram_jaccard": dedup_ngram_jaccard,
     "dedup_minhash_lsh": dedup_minhash_lsh,
-    "dedup_minhash_lsh_expr": dedup_minhash_lsh_expr,
     "dedup_simhash": dedup_simhash,
     "dedup_embedding_cosine": dedup_embedding_cosine,
     "dedup_connected_components": dedup_connected_components,
@@ -1570,7 +1518,6 @@ ORACLES = {
     "dedup_exact": DEDUP_EXACT_SQL,
     "dedup_ngram_jaccard": NGRAM_JACCARD_SQL,
     "dedup_minhash_lsh": NGRAM_JACCARD_SQL,
-    "dedup_minhash_lsh_expr": NGRAM_JACCARD_SQL,
     "dedup_simhash": _simhash_oracle_sql(),
     "dedup_embedding_cosine": DEDUP_EMB_SQL,
     "semdedup_prune": SEMDEDUP_SQL,

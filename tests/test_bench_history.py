@@ -5,8 +5,10 @@ view of prior rounds, so the loader's filtering rules are contract:
 an errored round (rc != 0) must contribute NOTHING (its partial rows
 would masquerade as a fast round), malformed artifacts must be skipped
 rather than abort the bench, and both the driver's wrapped shape
-({"rc": 0, "parsed": {...}}) and a raw payload must parse. No Spark
-session involved — these run in milliseconds.
+({"rc": 0, "parsed": {...}}) and a raw payload must parse. The
+one-line stdout contract is guarded too: the shed order, and the
+bench_full.json sidecar written whenever the printed line lacks a
+payload field. No Spark session involved — these run in milliseconds.
 """
 
 from __future__ import annotations
@@ -83,14 +85,21 @@ def test_shed_keeps_everything_when_line_fits():
     assert bench._shed_for_stdout(p) == p
 
 
+def _without(p, *keys):
+    return {k: v for k, v in p.items() if k not in keys}
+
+
 def test_shed_drops_history_then_cold_but_never_queries():
-    # Force oversize: enough padding that only dropping BOTH extras fits.
-    p = _payload(pad=1400)
+    # pad=700: dropping history_totals alone makes the line fit
+    p = _payload(pad=700)
     out = bench._shed_for_stdout(p)
-    assert "queries" in out and out["queries"] == p["queries"]
-    assert "history_totals" not in out
-    # queries_cold survives only if the line now fits; with this pad it does
-    assert len(json.dumps(out)) <= bench.STDOUT_LINE_BUDGET or "queries_cold" not in out
+    assert out == _without(p, "history_totals")
+    assert len(json.dumps(out)) <= bench.STDOUT_LINE_BUDGET
+    # pad=1200: only dropping BOTH extras fits; `queries` always stays
+    p = _payload(pad=1200)
+    out = bench._shed_for_stdout(p)
+    assert out == _without(p, "history_totals", "queries_cold")
+    assert len(json.dumps(out)) <= bench.STDOUT_LINE_BUDGET
 
 
 def test_shed_never_touches_the_series_fields():
@@ -99,3 +108,36 @@ def test_shed_never_touches_the_series_fields():
     assert out["queries"] == p["queries"]
     assert out["value"] == p["value"]
     assert "queries_cold" not in out and "history_totals" not in out
+
+
+# --- bench_full.json sidecar ------------------------------------------------
+
+
+def _full(p):
+    return {**p, "calibration_sec": 1.0, "calibration_io_sec": 2.0}
+
+
+def test_no_sidecar_when_nothing_is_shed(tmp_path):
+    p = _full(_payload())
+    sidecar = tmp_path / "bench_full.json"
+    assert bench._stdout_line(p, str(sidecar)) == json.dumps(p)
+    assert not sidecar.exists()
+
+
+def test_sidecar_written_whenever_anything_was_shed(tmp_path):
+    # the shed line fits, so stdout keeps `queries` — but history_totals
+    # left it, so the full payload must land in the sidecar
+    p = _full(_payload(pad=700))
+    sidecar = tmp_path / "bench_full.json"
+    line = bench._stdout_line(p, str(sidecar))
+    assert json.loads(line) == _without(p, "history_totals")
+    assert json.loads(sidecar.read_text()) == p
+
+
+def test_oversized_line_falls_back_to_compact_summary(tmp_path):
+    p = _full(_payload(n_queries=220))
+    sidecar = tmp_path / "bench_full.json"
+    line = json.loads(bench._stdout_line(p, str(sidecar)))
+    assert line["n_queries"] == 220 and line["full_payload"] == "bench_full.json"
+    assert len(json.dumps(line)) <= bench.STDOUT_LINE_BUDGET
+    assert json.loads(sidecar.read_text()) == p

@@ -3,12 +3,13 @@ LSH↔exact equivalence, SimHash behavior, signature determinism."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pyspark.sql.functions as F
 
+from collimate_spark.functions import fast_text as ft
 from collimate_spark.functions import text as X
 from collimate_spark.operators.dedup import (
     dedup_minhash_lsh,
-    dedup_minhash_lsh_expr,
     dedup_ngram_jaccard,
     dedup_simhash,
 )
@@ -16,14 +17,10 @@ from collimate_spark.operators.dedup import (
 
 def test_minhash_lsh_equals_exact_jaccard(spark, sf_dir):
     """At 32×4 banding, P(missing a j≥0.8 pair) ≈ 5e-8 — verified LSH
-    output must equal the exact shared-shingle join, for both the numpy
-    and the pure-expression kernel."""
+    output must equal the exact shared-shingle join."""
     exact = {(r.doc_a, r.doc_b, r.jaccard) for r in dedup_ngram_jaccard(spark, sf_dir).collect()}
     lsh = {(r.doc_a, r.doc_b, r.jaccard) for r in dedup_minhash_lsh(spark, sf_dir).collect()}
-    lsh_expr = {
-        (r.doc_a, r.doc_b, r.jaccard) for r in dedup_minhash_lsh_expr(spark, sf_dir).collect()
-    }
-    assert exact == lsh == lsh_expr
+    assert exact == lsh
     assert len(exact) > 0  # the testdata plants near-dups; empty = broken
 
 
@@ -54,24 +51,41 @@ def test_winnow_pairs_subset_of_jaccard(spark, sf_dir):
     assert len(wp & jac) >= len(wp) * 0.8
 
 
-def test_identical_text_same_simhash_and_signature(spark):
-    df = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog"),
-         (2, "the quick brown fox jumps over the lazy dog"),
-         (3, "a completely different sentence about spark engines at scale")],
-        ["doc_id", "text"],
+def _band_hashes(docs) -> dict[int, list[int]]:
+    """doc_id → its LSH_BANDS band hashes in band order, from the
+    minhash_bands kernel run on one pandas batch."""
+    out = pd.concat(list(ft.minhash_bands(iter([docs]))), ignore_index=True)
+    by_doc: dict[int, dict[int, int]] = {}
+    for d, b, h in zip(out["doc_id"], out["band"], out["band_hash"]):
+        by_doc.setdefault(int(d), {})[int(b)] = int(h)
+    return {d: [bands[b] for b in sorted(bands)] for d, bands in by_doc.items()}
+
+
+def test_identical_text_same_simhash_and_signature():
+    """Identical texts get identical 128-bit SimHash fingerprints and
+    identical MinHash band hashes; a different text differs in both.
+    Pure-pandas test of the production kernels: no JVM needed."""
+    docs = pd.DataFrame(
+        {
+            "doc_id": [1, 2, 3],
+            "text": [
+                "the quick brown fox jumps over the lazy dog",
+                "the quick brown fox jumps over the lazy dog",
+                "a completely different sentence about spark engines at scale",
+            ],
+        }
     )
-    toks = X.tokens(F.col("text"))
-    out = df.select(
-        "doc_id",
-        X.simhash64(toks).alias("sh"),
-        X.minhash_signature(X.word_shingles(toks, 3), 16).alias("sig"),
-    ).collect()
-    by_id = {r.doc_id: r for r in out}
-    assert by_id[1].sh == by_id[2].sh
-    assert by_id[1].sig == by_id[2].sig
-    assert by_id[1].sh != by_id[3].sh
-    assert len(by_id[1].sig) == 16
+    sims = pd.concat(list(ft.simhash_fingerprints128(iter([docs]))), ignore_index=True)
+    sh = {
+        int(d): (int(hi), int(lo))
+        for d, hi, lo in zip(sims["doc_id"], sims["sh_hi"], sims["sh_lo"])
+    }
+    assert sh[1] == sh[2]
+    assert sh[1] != sh[3]
+    bands = _band_hashes(docs)
+    assert bands[1] == bands[2]
+    assert bands[1] != bands[3]
+    assert len(bands[1]) == ft.LSH_BANDS
 
 
 def test_hamming64_matches_popcount(spark):
@@ -85,19 +99,25 @@ def test_hamming64_matches_popcount(spark):
         assert r.h == bin(r.a ^ r.b).count("1")
 
 
-def test_minhash_estimates_jaccard(spark):
-    """MinHash signature agreement rate ≈ true Jaccard (here two texts
-    sharing most trigrams)."""
-    a = "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12 w13 w14 w15"
-    b = a + " w16"  # adds one trigram-ish tail
-    df = spark.createDataFrame([(1, a), (2, b)], ["doc_id", "text"])
-    sig = df.select(
-        "doc_id", X.minhash_signature(X.word_shingles(X.tokens(F.col("text")), 3), 128).alias("s")
-    ).collect()
-    s1, s2 = sig[0].s, sig[1].s
-    agree = sum(1 for x, y in zip(s1, s2) if x == y) / 128
-    # true jaccard = 14/15 ≈ 0.933; agreement should be in the same region
-    assert 0.75 <= agree <= 1.0
+def test_minhash_estimates_jaccard():
+    """A band agrees iff all LSH_ROWS of its minima agree, so the share of
+    agreeing bands estimates j^LSH_ROWS. 64 disjoint-vocabulary doc pairs,
+    each sharing 14 of 15 trigrams (j ≈ 0.933), should agree on about
+    j⁴ ≈ 0.76 of their 32 bands — pooled over 2048 bands, close enough to
+    tell j⁴ from j³ ≈ 0.81 and j⁵ ≈ 0.71. Pure-pandas test of the
+    production kernel: no JVM needed."""
+    n_pairs = 64
+    ids, texts = [], []
+    for k in range(n_pairs):
+        a = " ".join(f"p{k}w{i}" for i in range(16))
+        ids += [2 * k, 2 * k + 1]
+        texts += [a, a + f" p{k}w16"]  # one extra trigram: j = 14/15
+    bands = _band_hashes(pd.DataFrame({"doc_id": ids, "text": texts}))
+    agree = sum(
+        x == y for k in range(n_pairs) for x, y in zip(bands[2 * k], bands[2 * k + 1])
+    ) / (n_pairs * ft.LSH_BANDS)
+    expected = (14 / 15) ** ft.LSH_ROWS
+    assert abs(agree - expected) <= 0.03, (agree, expected)
 
 
 def test_propagate_components_chain_graph(spark):
@@ -266,10 +286,6 @@ def test_fused_band_set_kernel_matches_parents():
     equal to shingle_hash_sets (blake2b-64, sorted) for every doc with
     ≥3 tokens — <3-token docs emit nothing in both framings. Pure-pandas
     test: no JVM needed."""
-    import pandas as pd
-
-    from collimate_spark.functions import fast_text as ft
-
     docs = pd.DataFrame(
         {
             "doc_id": [1, 2, 3, 4, 5, 6],

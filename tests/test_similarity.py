@@ -186,6 +186,19 @@ def test_quantizer_deterministic(spark, sf_dir):
     assert np.allclose(np.linalg.norm(c1, axis=1), 1.0)
 
 
+def test_trainers_reject_an_empty_embeddings_frame(spark):
+    """Both trainers raise the documented ValueError, naming the table,
+    on a zero-row (vec_id, embedding) frame instead of a numpy AxisError
+    from normalizing a 1-D empty array."""
+    emb = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    key = "empty-embeddings"
+    with pytest.raises(ValueError, match=key):
+        fast_vec.trained_quantizer(spark, emb, IVF_K, cache_key=key)
+    with pytest.raises(ValueError, match=key):
+        fast_vec.trained_pq_codebooks(spark, emb, cache_key=key)
+    assert (key, IVF_K) not in fast_vec._QUANTIZER_CACHE
+
+
 def test_centroids_shape(spark, sf_dir):
     got = centroids(spark, sf_dir).collect()
     emb = load_table(spark, "embeddings", sf_dir)
