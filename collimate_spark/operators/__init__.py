@@ -16,7 +16,7 @@ after slot 50 and stays covered by tests/test_oracle_parity.py.
 
 CACHE-LIFETIME CONTRACT (covers every caching operator — the dedup
 family, market_basket_rules, encoding_advisor_lineitem, asof_join
-carry frames, kcore/graph edge lists, gdpr/ppjoin gated key sets, and
+carry frames, kcore/graph edge lists, ppjoin prefix indexes, and
 any other operator caching ``.cache()``-style internally): operators
 cache per-query scratch frames and deliberately do NOT unpersist them,
 because the returned DataFrame's lineage still references the cached

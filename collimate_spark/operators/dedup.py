@@ -152,13 +152,11 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified-exact output, measured 111s → ~8s at 50k docs.
 
     The frequency table is vocabulary-sized (Heaps-law growth), so its
-    join is size-gated (cache → count → broadcast-if-fits, the
-    gdpr/kcore pattern); beyond the threshold it degrades to the
+    join carries no hint: the planner broadcasts it while it fits under
+    the session threshold, and beyond that it stays the
     shingle-partitioned shuffle it is already keyed on. Shingles travel
     as 64-bit hashes (see _shingle_sets)."""
     from pyspark.sql import Window
-
-    from collimate_spark.operators.graph import _broadcast_threshold_bytes
 
     shingled = _shingle_sets(spark, sf_dir).transform(scache)
     exploded = shingled.select("doc_id", F.explode("shingles").alias("shingle"))
@@ -166,19 +164,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # substitution that keeps this plan at ONE corpus scan (measured: 3
     # FileScans with freq cached, 1 without — the freq cache's analyzed
     # plan stops the a/b self-join sides from matching the shingled
-    # cache entry). The gate count below re-aggregates from the CACHED
-    # shingle frame — one cheap agg at build time, no corpus rescan —
-    # and at runtime freq computes once inside its single exchange.
+    # cache entry). At runtime freq computes once inside its single
+    # exchange.
     freq = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("freq"))
-    # 8-byte hash + 8-byte count ≈ 48 B/row in a broadcast hashed relation
-    freq_side = (
-        F.broadcast(freq)
-        if freq.count() * 48 <= _broadcast_threshold_bytes(spark)
-        else freq
-    )
     w = Window.partitionBy("doc_id").orderBy(F.col("freq").asc(), F.col("shingle").asc())
     prefix = (
-        exploded.join(freq_side, "shingle")
+        exploded.join(freq, "shingle")
         .withColumn("rk", F.row_number().over(w))
         .join(shingled.select("doc_id", F.size("shingles").alias("sz")), "doc_id")
         .filter(
@@ -986,7 +977,11 @@ def set_overlap_join_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The tokenized slice (4 plan branches) and the prefix index (both
     sides of the candidate self-join) are cached — uncached, each branch
-    re-ran the tokenize scan and the frequency-order window."""
+    re-ran the tokenize scan and the frequency-order window. The token
+    frequency table is VOCABULARY-sized (Heaps-law growth — unbounded at
+    100 TB), so its join carries no hint: the planner broadcasts it while
+    it fits under the session threshold and shuffles it on the token
+    (co-keyed already) beyond that."""
     docs = (
         load_table(spark, "documents", sf_dir)
         .filter(F.col("doc_id") < OVERLAP_SLICE)
@@ -994,23 +989,12 @@ def set_overlap_join_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(scache)
     )
     tok = docs.select("doc_id", F.explode("s").alias("token"))
-    freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("freq")).transform(scache)
+    freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
     from pyspark.sql import Window
-
-    from collimate_spark.operators.graph import _broadcast_threshold_bytes
-
-    # freq is VOCABULARY-sized (Heaps-law growth with the corpus —
-    # unbounded at 100 TB), so its broadcast is SIZE-GATED (gdpr/kcore
-    # pattern): cached, counted, hinted only under the session
-    # threshold; beyond it the join degrades to a token-partitioned
-    # shuffle (co-keyed already). ~16-char token + long ≈ 64 bytes/row
-    # in a broadcast hashed relation.
-    freq_fits = freq.count() * 64 <= _broadcast_threshold_bytes(spark)
-    freq_side = F.broadcast(freq) if freq_fits else freq
 
     w = Window.partitionBy("doc_id").orderBy(F.col("freq").asc(), F.col("token").asc())
     prefix = (
-        tok.join(freq_side, "token")
+        tok.join(freq, "token")
         .withColumn("rk", F.row_number().over(w))
         .join(docs.select("doc_id", F.size("s").alias("sz")), "doc_id")
         .filter(F.col("rk") <= F.col("sz") - OVERLAP_T + 1)
@@ -1091,8 +1075,8 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     each branch re-runs the shingling scan (scan ceiling = 1 pinned in
     test_plans.py). ``freq`` is deliberately NOT cached (caching it
     breaks cache substitution on sibling branches — the ngram-twin
-    lesson, 1 → 3 corpus scans); its broadcast is size-gated via the
-    cached frame's cheap re-agg count.
+    lesson, 1 → 3 corpus scans), and its join carries no hint: the
+    planner broadcasts it while it fits under the session threshold.
 
     Ranked-index build (VERDICT r10 #2 — the former per-doc
     ``row_number()`` window forced a partition-WIDE SortExec over every
@@ -1146,17 +1130,9 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from collimate_spark.operators.graph import _broadcast_threshold_bytes
-
     shingled = _shingle_sets(spark, sf_dir).transform(scache)
     exploded = shingled.select("doc_id", F.explode("shingles").alias("shingle"))
     freq = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("freq"))
-    # 8-byte hash + 8-byte count ≈ 48 B/row in a broadcast hashed relation
-    freq_side = (
-        F.broadcast(freq)
-        if freq.count() * 48 <= _broadcast_threshold_bytes(spark)
-        else freq
-    )
     # ONE doc-grained ranked index serves both join sides (cached: the
     # freq join and per-doc ordering run once). The rarest-first order is
     # computed row-locally — sort_array over one doc's (freq, shingle)
@@ -1169,7 +1145,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so they apply at join time, not in the index.
     tau = F.lit(CONTAINMENT_THRESHOLD)
     per_doc = (
-        exploded.join(freq_side, "shingle")
+        exploded.join(freq, "shingle")
         .groupBy("doc_id")
         .agg(
             F.sort_array(

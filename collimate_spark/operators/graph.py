@@ -120,7 +120,9 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = sym.join(deg, "x").select(
         F.col("x").alias("src"), F.col("y").alias("dst"), "deg"
     ).transform(scache)
-    n_nodes = deg.count()
+    # an empty graph seeds no ranks, so its divisor is never read; max()
+    # keeps 1/N defined and the result is zero rows, like the oracle's
+    n_nodes = max(deg.count(), 1)
     ranks = deg.select(F.col("x").alias("node"), F.lit(1.0 / n_nodes).alias("r"))
     for i in range(_ITERS):
         contribs = edges.join(ranks, on=F.col("src") == F.col("node")).select(
@@ -173,15 +175,13 @@ def market_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     same shape per itemset size — the pair pass shown here is the one
     that matters at scale (larger itemsets prune exponentially).
 
-    The item-marginal joins are SIZE-GATED: ``item_c`` is |distinct
-    items|-sized — catalog-proportional, not constant — so it broadcasts
-    only while its counted size fits under the session broadcast
-    threshold (cache → count → hint-if-fits, the same gate as
-    asof_join_forward / kcore); past that the marginal joins fall back
-    to shuffle joins on the already-reduced pair frame. Caches here are
-    per-query scratch: long-lived multi-query sessions should
-    ``spark.catalog.clearCache()`` between queries (see
-    ``operators/__init__`` docstring)."""
+    The item-marginal joins carry no hint: ``item_c`` is |distinct
+    items|-sized — catalog-proportional, not constant — so the planner
+    picks the strategy (broadcast from the cached frame's statistics or
+    AQE's runtime map-output sizes, shuffle joins on the already-reduced
+    pair frame beyond the threshold). Caches here are per-query scratch:
+    long-lived multi-query sessions should ``clear_scratch()`` between
+    queries (see ``operators/__init__`` docstring)."""
     li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
     baskets = (
         li.groupBy("l_orderkey")
@@ -204,15 +204,10 @@ def market_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         baskets.select(F.explode("items").alias("k"))
         .groupBy("k")
         .agg(F.count(F.lit(1)).alias("c"))
-        .transform(scache)  # counted once for the gate, read twice by the joins
+        .transform(scache)  # read by both marginal joins
     )
-    # (long k, long c) row in a broadcast hashed relation ≈ 16 data
-    # bytes + overhead; same conservative 48 B/row as asof_join_forward
-    fits = item_c.count() * 48 <= _broadcast_threshold_bytes(spark)
     cx = item_c.select(F.col("k").alias("x"), F.col("c").alias("c_x"))
     cy = item_c.select(F.col("k").alias("y"), F.col("c").alias("c_y"))
-    if fits:
-        cx, cy = F.broadcast(cx), F.broadcast(cy)
     return (
         pair_c.join(cx, "x")
         .join(cy, "y")
@@ -307,42 +302,11 @@ ORDER BY node
 
 KCORE_K = 3
 KCORE_MAX_ROUNDS = 20
-# conservative per-row bytes for a single-long survivor row in a broadcast
-# relation (8 data bytes + hashed-relation overhead)
-_KCORE_ROW_BYTES = 16
 
 
-def _broadcast_threshold_bytes(spark: SparkSession) -> int:
-    """Parse spark.sql.autoBroadcastJoinThreshold ('10485760', '10MB',
-    '-1', ...) into bytes; -1 (broadcast disabled) maps to 0."""
-    raw = str(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    ).strip().lower()
-    mult = 1
-    for suffix, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                      ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-                      ("b", 1)):
-        if raw.endswith(suffix):
-            raw, mult = raw[: -len(suffix)], m
-            break
-    try:
-        n = int(float(raw)) * mult
-    except ValueError:
-        n = 10 << 20
-    return max(n, 0)
-
-
-def _semi_join_survivors(sym: DataFrame, alive: DataFrame, n_alive: int,
-                         threshold_bytes: int) -> DataFrame:
-    """Edges with BOTH endpoints in the survivor set. Broadcasts the
-    survivor set only while it plausibly fits under the session's
-    broadcast threshold; past that, plain left-semi joins (shuffle /
-    sort-merge) — same semantics, no driver or executor broadcast
-    ceiling at 100 TB vertex cardinalities."""
-    if n_alive * _KCORE_ROW_BYTES <= threshold_bytes:
-        return sym.join(F.broadcast(alive), "x", "left_semi").join(
-            F.broadcast(alive.withColumnRenamed("x", "y")), "y", "left_semi"
-        )
+def _survivor_edges(sym: DataFrame, alive: DataFrame) -> DataFrame:
+    """Edges with BOTH endpoints in the survivor set (two left-semi
+    joins; the planner picks broadcast or shuffle per round)."""
     return sym.join(alive, "x", "left_semi").join(
         alive.withColumnRenamed("x", "y"), "y", "left_semi"
     )
@@ -356,8 +320,8 @@ def kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint loop). Emits surviving vertices with their within-core
     degree.
 
-    Scale: the symmetric edge list materializes once (localCheckpoint);
-    each round joins it against the broadcast SURVIVOR VERTEX SET and
+    Scale: the symmetric edge list materializes once (columnar cache);
+    each round semi-joins it against the SURVIVOR VERTEX SET and
     re-aggregates degrees — per-round state is |V| longs, never a second
     edge materialization, and lineage stays flat. The driver-side
     per-round survivor count is bounded metadata (one long), and the
@@ -365,17 +329,16 @@ def kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-clique co-purchase graphs, capped at KCORE_MAX_ROUNDS with a
     fixpoint break (a cap hit without convergence warns — a truncated
     non-k-core result must not pass silently). The survivor-set semi
-    joins are SIZE-GATED in code (``_semi_join_survivors``): broadcast
-    while the set fits under spark.sql.autoBroadcastJoinThreshold,
-    plain shuffle left-semi joins beyond it — same shape, no broadcast
-    ceiling at 100 TB vertex cardinalities. Oracled by BOUNDED UNROLLING
+    joins carry no hint: the planner broadcasts the checkpointed set
+    while it fits under spark.sql.autoBroadcastJoinThreshold and
+    shuffles beyond it — same shape, no broadcast ceiling at 100 TB
+    vertex cardinalities. Oracled by BOUNDED UNROLLING
     (``KCORE_SQL``): peeling is not monotone, so a recursive CTE can't
     express it, but the round cap makes it finite — KCORE_MAX_ROUNDS
     chained CTEs, each one peel step; post-fixpoint rounds are no-ops,
     so the unrolled result equals the early-breaking loop exactly.
     Tests additionally verify against pure-Python peeling on the
-    collected edge list, and force the shuffle fallback path with a
-    floored threshold."""
+    collected edge list, and against a run with broadcast disabled."""
     e = _copurchase_edges(spark, sf_dir)
     # the edge list materializes ONCE; every round iterates only the
     # (vertex-sized) survivor set against it — never re-materializing
@@ -386,14 +349,13 @@ def kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = e.unionByName(
         e.select(F.col("y").alias("x"), F.col("x").alias("y"))
     ).transform(scache)  # columnar cache: localCheckpoint's RDD round-trip costs 2×
-    threshold = _broadcast_threshold_bytes(spark)
     alive = sym.select("x").distinct().localCheckpoint()
     n_prev = alive.count()  # bounded metadata: one long per round
     converged = False
     for _ in range(KCORE_MAX_ROUNDS):
-        live_edges = _semi_join_survivors(sym, alive, n_prev, threshold)
         keep = (
-            live_edges.groupBy("x")
+            _survivor_edges(sym, alive)
+            .groupBy("x")
             .agg(F.count(F.lit(1)).alias("d"))
             .filter(F.col("d") >= KCORE_K)
             .select("x")
@@ -413,9 +375,9 @@ def kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
             RuntimeWarning,
             stacklevel=2,
         )
-    final_edges = _semi_join_survivors(sym, alive, n_prev, threshold)
     return (
-        final_edges.groupBy(F.col("x").alias("node"))
+        _survivor_edges(sym, alive)
+        .groupBy(F.col("x").alias("node"))
         .agg(F.count(F.lit(1)).alias("core_degree"))
         .orderBy("node")
     )

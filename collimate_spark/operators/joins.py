@@ -356,16 +356,12 @@ def asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     the simultaneous purchase), and a carry-over table holding the first
     purchase of any FOLLOWING day per user. The carry is keyed by
     (user_id, day) — distinct user-days, FACT-proportional at 100 TB —
-    so its broadcast is SIZE-GATED like gdpr_erasure_audit / kcore:
-    materialize it once (cached), count it, and hint the broadcast only
-    under the session threshold. The gate matters both ways: a static
-    hint avoids AQE's shuffle-write of the click stream before its
-    broadcast conversion (measured ~1.5× on this query at sf0.1), and
-    past the ceiling the join degrades to a shuffle on the same
-    (user_id, day) key the window pass already partitioned by instead
-    of failing. The backward variant's (bucket, month) carry stays
-    unconditionally hinted — its cardinality is bounded by
-    construction."""
+    so its join carries no hint: the planner broadcasts it while it fits
+    under the session threshold, and past the ceiling the join stays a
+    shuffle on the same (user_id, day) key the window pass already
+    partitioned by instead of failing. The backward variant's
+    (bucket, month) carry stays unconditionally hinted — its
+    cardinality is bounded by construction."""
     ev = load_table(spark, "events", sf_dir)
     clicks = ev.filter(F.col("event_type") == "click").select(
         "user_id", "ts", "event_id"
@@ -431,18 +427,11 @@ def asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
         spine.join(day_first, ["user_id", "day"], "left")
         .withColumn("carry_ts", F.min("dfirst").over(carry_w))
         .select("user_id", "day", "carry_ts")
-        .transform(scache)  # measured once for the gate, reused by the join
     )
-    from collimate_spark.operators.graph import _broadcast_threshold_bytes
-
-    # (long, date, ts) row in a broadcast hashed relation ≈ 20 data
-    # bytes + overhead
-    fits = carry.count() * 48 <= _broadcast_threshold_bytes(spark)
-    carry_side = F.broadcast(carry) if fits else carry
     nxt = F.coalesce(F.col("asof_within"), F.col("carry_ts"))
     return (
         within.filter(F.col("event_id").isNotNull())
-        .join(carry_side, ["user_id", "day"], "left")
+        .join(carry, ["user_id", "day"], "left")
         .select(
             "event_id",
             nxt.alias("next_purchase_ts"),

@@ -642,12 +642,6 @@ ORDER BY bucket
 # ---------------------------------------------------------------------------
 # Right-to-erasure cascade audit (GDPR delete scoping)
 
-# conservative per-row bytes for a single-long key row in a broadcast hashed
-# relation (8 data bytes + hashed-relation overhead), same model as
-# graph._KCORE_ROW_BYTES
-_ERASE_KEY_ROW_BYTES = 16
-
-
 def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scope a right-to-erasure request BEFORE executing it: for a
     deterministic erase cohort (every 97th customer key), count the rows
@@ -663,12 +657,11 @@ def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orders→cohort) into a FACT-FACT semi join on l_orderkey — that one
     is the real shuffle, and it's the irreducible one: erasure cascades
     through fact-to-fact edges exactly once per hop. The order-key set
-    feeding it is fact-derived, so its broadcast is size-gated on the
-    measured key count vs the session broadcast threshold (same pattern
-    as graph._semi_join_survivors); past the ceiling the join degrades
-    to a shuffle instead of failing."""
-    from collimate_spark.operators.graph import _broadcast_threshold_bytes
-
+    feeding it is fact-derived, so that join carries no hint: AQE
+    broadcasts it from its runtime size while it fits under the session
+    threshold, and past the ceiling the join stays a shuffle instead of
+    failing. ``erased_pct`` is NULL for an empty table (try_divide), as
+    in the oracle."""
     cohort = (
         load_table(spark, "customer", sf_dir)
         .filter(F.col("c_custkey") % 97 == 0)
@@ -676,24 +669,15 @@ def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(scache)  # dimension-sized erase set, broadcast into 4 audits
     )
 
-    def _audit(
-        df: DataFrame,
-        key: str,
-        table: str,
-        keys: DataFrame = None,
-        hint_broadcast: bool = True,
-    ) -> DataFrame:
-        # ONE scan per table: broadcast LEFT join against the (unique-key)
-        # erase set and fold total + erased into a single conditional
-        # aggregate — the semi-join-then-rescan form cost two scans per
-        # table (13 FileScans for the whole audit; this shape halves it).
-        # hint_broadcast=False drops the hint for key sets whose size was
-        # measured to exceed the session broadcast threshold; the left
-        # join then shuffles on the key like any fact-fact semi join.
-        ks = cohort if keys is None else keys
+    def _audit(df: DataFrame, key: str, table: str, keys: DataFrame = None) -> DataFrame:
+        # ONE scan per table: LEFT join against the (unique-key) erase set
+        # and fold total + erased into a single conditional aggregate —
+        # the semi-join-then-rescan form cost two scans per table (13
+        # FileScans for the whole audit; this shape halves it). The
+        # dimension-sized cohort is hinted; a fact-derived key set is not.
+        ks = F.broadcast(cohort) if keys is None else keys
         kcol = ks.columns[0]
-        side = F.broadcast(ks) if hint_broadcast else ks
-        joined = df.join(side, F.col(key) == F.col(kcol), "left")
+        joined = df.join(ks, F.col(key) == F.col(kcol), "left")
         return joined.agg(
             F.count(F.lit(1)).alias("rows_total"),
             F.count(kcol).alias("rows_erased"),
@@ -701,7 +685,7 @@ def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(table).alias("table_name"),
             "rows_total",
             "rows_erased",
-            F.round(F.col("rows_erased") / F.col("rows_total"), 4).alias("erased_pct"),
+            F.round(F.try_divide("rows_erased", "rows_total"), 4).alias("erased_pct"),
         )
 
     customer = load_table(spark, "customer", sf_dir)
@@ -710,31 +694,14 @@ def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, "events", sf_dir)
 
     # two-hop key set: o_orderkey (unique, orders pk) of erased orders —
-    # FACT-derived (1/97 of orders), so the broadcast is size-GATED, not
-    # assumed: materialize the key set once (cached — the count below and
-    # the lineitem audit share it), measure its cardinality, and only
-    # hint the broadcast while it fits under the session threshold. Past
-    # that (100× scale, or broadcast disabled) the audit join degrades to
-    # a shuffle on l_orderkey instead of failing on the broadcast ceiling.
-    erased_order_keys = (
-        orders.join(F.broadcast(cohort), orders.o_custkey == F.col("k"), "left_semi")
-        .select("o_orderkey")
-        .transform(scache)
-    )
-    n_keys = erased_order_keys.count()
-    fits = n_keys * _ERASE_KEY_ROW_BYTES <= _broadcast_threshold_bytes(spark)
+    # FACT-derived (1/97 of orders), so its size is left to the planner
+    erased_order_keys = orders.join(
+        F.broadcast(cohort), orders.o_custkey == F.col("k"), "left_semi"
+    ).select("o_orderkey")
     report = (
         _audit(customer, "c_custkey", "customer")
         .unionByName(_audit(orders, "o_custkey", "orders"))
-        .unionByName(
-            _audit(
-                lineitem,
-                "l_orderkey",
-                "lineitem",
-                keys=erased_order_keys,
-                hint_broadcast=fits,
-            )
-        )
+        .unionByName(_audit(lineitem, "l_orderkey", "lineitem", keys=erased_order_keys))
         .unionByName(_audit(events, "user_id", "events"))
     )
     return report.orderBy("table_name")

@@ -1,7 +1,7 @@
 """Operator-internal scratch-cache registry.
 
 Many operators ``.cache()`` a small multiply-referenced frame (a medians
-table, a shingle set, a degree table, a gated key set) because 2-4 plan
+table, a shingle set, a degree table, a prefix index) because 2-4 plan
 branches consume it. The returned DataFrame's lineage still references
 the cached frame, so the operator itself cannot unpersist eagerly — an
 unpersist before the caller materializes would silently recompute the

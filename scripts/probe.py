@@ -1,15 +1,20 @@
-"""Per-query probe: time individual queries (noop sink, min-of-N) and
-dump .explain('formatted') plans.
+"""Per-query probe: time individual queries (noop sink, min-of-N), count
+the Spark jobs each launches while its DataFrame is built, and dump
+.explain('formatted') plans.
 
 Usage:
     python scripts/probe.py PLANS_DIR [--runs N] [--plans-suffix before|after]
                             [--plan-only] q1 q2 ...
 
-Each query is built fresh per run (the bench methodology), timed against
-the noop sink, and, with --plans-suffix, its formatted plan written to
-PLANS_DIR/<name>_<suffix>.txt (e.g. PLANS_DIR=plans/r14). Scratch caches
-are released between queries so one query's cached frames never inflate
-the next row. The input scale comes from SPARK_GRAFT_SF_DIR.
+Each query is built fresh per run (the bench methodology), after its
+scratch caches are released, so every run builds against a cold scratch
+cache. The operator call runs under its own job group; the jobs Spark
+records for that group (driver-side counts, cache fills, iterative loops)
+print as ``build_jobs`` and the call's wall time as ``build_s``, one
+entry per run, next to the noop-sink times (which start after the build).
+With --plans-suffix the formatted plan is written to
+PLANS_DIR/<name>_<suffix>.txt (e.g. PLANS_DIR=plans/r14). The input
+scale comes from SPARK_GRAFT_SF_DIR.
 """
 
 from __future__ import annotations
@@ -38,6 +43,7 @@ def main() -> None:
     args = ap.parse_args()
     tag = os.path.basename(os.path.normpath(args.plans_dir))
     spark = get_session(f"collimate_spark_probe_{tag}")
+    sc = spark.sparkContext
     queries = all_queries()
     # warm-up: JVM + parquet footer caches (same as bench.py)
     queries["q6_forecast_revenue"](spark, SF_DIR).count()
@@ -56,15 +62,24 @@ def main() -> None:
             if args.plan_only:
                 print(f"{name}: plan written", flush=True)
                 continue
-            times = []
-            for _ in range(args.runs):
-                spark.sparkContext.setJobDescription(f"probe {tag}: {name}")
+            times, build_s, groups = [], [], []
+            for i in range(args.runs):
+                clear_scratch()
+                groups.append(f"probe-build:{name}:{i}")
+                sc.setJobGroup(groups[-1], f"probe {tag}: build {name}")
+                t0 = time.time()
                 df = queries[name](spark, SF_DIR)
+                build_s.append(round(time.time() - t0, 3))
+                sc.setJobGroup(f"probe-run:{name}:{i}", f"probe {tag}: {name}")
                 t0 = time.time()
                 df.write.format("noop").mode("overwrite").save()
                 times.append(time.time() - t0)
+            # job starts reach the status store through the async listener bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+            build_jobs = [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups]
             print(
-                f"{name}: min={min(times):.3f} all={[round(t, 3) for t in times]}",
+                f"{name}: min={min(times):.3f} all={[round(t, 3) for t in times]} "
+                f"build_s={build_s} build_jobs={build_jobs}",
                 flush=True,
             )
         except Exception as e:  # noqa: BLE001 - one red row, not a dead probe

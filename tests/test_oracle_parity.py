@@ -137,6 +137,35 @@ def _check_parity(spark, name, sf_dir):
     assert not mismatches, f"{name}: {len(mismatches)} row mismatches; first 3: {mismatches[:3]}"
 
 
+def test_gdpr_erasure_audit_on_empty_tables(spark, tmp_path):
+    """On a zero-row copy of every table the audit must return the
+    oracle's answer (four rows of zero counts, NULL erased_pct) instead
+    of raising DIVIDE_BY_ZERO under ANSI."""
+    import glob
+    import shutil
+
+    for t in TABLES:
+        stage = tmp_path / f"{t}_stage"
+        spark.read.parquet(f"{SF_DIR}/{t}.parquet").limit(0).coalesce(1).write.parquet(
+            str(stage)
+        )
+        # one plain file per table, the layout DuckDB's views read
+        (part,) = glob.glob(str(stage / "part-*.parquet"))
+        shutil.move(part, tmp_path / f"{t}.parquet")
+        shutil.rmtree(stage)
+    name = "gdpr_erasure_audit"
+    sdf = entrymod.queries()[name](spark, str(tmp_path))
+    con = _duck_con(str(tmp_path))
+    res = con.execute(entrymod.oracle_sql()[name])
+    duck_cols = [d[0].lower() for d in res.description]
+    duck_rows = res.fetchall()
+    con.close()
+    assert len(duck_rows) == 4
+    assert _norm_rows([c.lower() for c in sdf.columns], sdf.collect()) == _norm_rows(
+        duck_cols, duck_rows
+    )
+
+
 NON_ORACLED = sorted(set(entrymod.queries().keys()) - set(ORACLED))
 
 

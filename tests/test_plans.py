@@ -673,9 +673,9 @@ def test_kcore_matches_python_peeling(spark, sf_dir):
 
 
 def test_kcore_shuffle_fallback_identical(spark, sf_dir):
-    """Force the size-gated fallback (broadcast disabled → threshold 0,
-    so every survivor set exceeds it): the shuffle left-semi-join path
-    must produce EXACTLY the broadcast path's 3-core."""
+    """Broadcast disabled vs default planning: with every survivor-set
+    semi join forced to shuffle, the 3-core must equal EXACTLY the one
+    default planning produces."""
     from collimate_spark.operators.graph import kcore_membership
 
     baseline = {r.node: r.core_degree for r in kcore_membership(spark, sf_dir).collect()}
@@ -721,10 +721,22 @@ def test_kcore_warns_when_round_cap_hit(spark):
         g.KCORE_MAX_ROUNDS = orig_rounds
 
 
+def test_pagerank_on_empty_graph_returns_no_rows(spark, monkeypatch):
+    """An edgeless co-purchase graph has no vertices to rank: the query
+    returns zero rows, as its oracle does, instead of dividing by N=0."""
+    import collimate_spark.operators.graph as g
+
+    empty = spark.createDataFrame([], "x long, y long")
+    monkeypatch.setattr(g, "_copurchase_edges", lambda _spark, _sf: empty)
+    out = g.pagerank_copurchase(spark, "unused")
+    assert out.columns == ["node", "rank"]
+    assert out.collect() == []
+
+
 def test_gdpr_shuffle_fallback_identical(spark, sf_dir):
-    """Force gdpr_erasure_audit's size-gated fallback (broadcast disabled
-    → threshold 0, so the fact-derived order-key set never fits): the
-    shuffle-join path must produce EXACTLY the broadcast path's report."""
+    """gdpr_erasure_audit with broadcast disabled vs default planning:
+    the shuffle-join path for the fact-derived order-key set must
+    produce EXACTLY the default plan's report."""
     from collimate_spark.operators.quality import gdpr_erasure_audit
 
     spark.catalog.clearCache()
@@ -876,13 +888,15 @@ def test_conversion_time_quantiles_approx_mode_within_gk_bound(spark, sf_dir):
         "lm_perplexity_score",
         "set_overlap_join_prefix",
         "market_basket_rules",
+        "dedup_ngram_jaccard",
+        "dedup_containment",
     ],
 )
 def test_size_gated_broadcast_fallback_identical(spark, sf_dir, name):
-    """Size gates over fact-/vocab-/catalog-proportional frames: force
-    the shuffle fallback (broadcast disabled → threshold 0) and require
-    the output to match the broadcast path — same contract as kcore's
-    and gdpr's gates. Float columns compare within 1e-9, not bit-exact:
+    """Joins against fact-/vocab-/catalog-proportional frames, broadcast
+    disabled vs default planning: the output with those joins forced to
+    shuffle must match the default plan's — same contract as kcore's
+    and gdpr's tests. Float columns compare within 1e-9, not bit-exact:
     broadcast vs shuffle joins can sum partials in a different order, so
     an avg-of-logs double may legitimately move ~1 ulp and flip a 4dp
     rounding boundary — that is summation-order noise, not a fallback
